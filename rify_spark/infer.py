@@ -713,6 +713,23 @@ def job_fingerprint(lrules: list, dtype_str: str, lineage: bool) -> str:
     return h.hexdigest()[:32]
 
 
+def saved_confs(spark: SparkSession, keys) -> dict:
+    """The values explicitly set for ``keys`` in this session, None where a
+    key is unset (a session not built by ``session.get_spark`` may leave even
+    ``spark.sql.shuffle.partitions`` at its built-in default)."""
+    return {k: spark.conf.get(k, None) for k in keys}
+
+
+def restore_confs(spark: SparkSession, saved: dict, keys) -> None:
+    """Put ``keys`` back to their :func:`saved_confs` state: re-set what
+    was set, unset what was not."""
+    for k in keys:
+        if saved[k] is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, saved[k])
+
+
 def unconditional_heads(lrules: list) -> list:
     """Driver-side literal head quads of empty-body rules, in rule order.
 
@@ -973,8 +990,8 @@ def fixpoint(
         "spark.sql.constraintPropagation.enabled": None,
         "spark.sql.shuffle.partitions": None,
     }
-    _saved = {k: spark.conf.get(k, "true") for k in _toggles}
-    _session_width = int(_saved["spark.sql.shuffle.partitions"])
+    _saved = saved_confs(spark, _toggles)
+    _session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     _percore = 250_000 * max(1, spark.sparkContext.defaultParallelism)
     codegen_below = (
         cfg.codegen_below_rows if cfg.codegen_below_rows is not None else _percore
@@ -1261,9 +1278,7 @@ def fixpoint(
                 if write_base and not cfg.checkpoint_retain_history:
                     ckpt.prune(last_base)
     finally:
-        for k, v in _saved.items():
-            if _toggles[k] is not None:
-                spark.conf.set(k, v)
+        restore_confs(spark, _saved, [k for k, v in _toggles.items() if v is not None])
 
     return FixpointResult(
         facts=store.union(),

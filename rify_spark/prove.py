@@ -17,6 +17,15 @@ Behavioral port of the reference's ``low_prove`` + ``recall_proof``
     semantics (src/prove.rs:171-210), run driver-side over the reachable
     slice of the arguments table (proof DAGs are tiny; collection is either
     a single collect or an iterative frontier join at scale).
+
+``api.prove`` runs this path for premise lists longer than
+``api.LOCAL_MAX_PREMISES`` and for requests that set ``checkpoint_dir``,
+``resume`` or ``max_iterations``. Shorter lists run on the driver-resident
+engine (local.py), which reuses :class:`LowApplication` and
+:func:`recall_proof`. Across engines the tie-break is the same
+(first round, then minimum ``(rule_index, inst)``). In string space
+(``encode_terms=False``) both engines give identical proofs; under hashed
+ids the order is over ids, so a tie may pick another valid derivation.
 """
 
 from __future__ import annotations

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import warnings
 from typing import Mapping, Optional
 
 from pyspark.sql import SparkSession
@@ -146,6 +147,12 @@ def _warm_session(spark: SparkSession) -> None:
         ]
         derived, _ = infer_df(spark, prem, wrules, InferConfig())
         derived.write.format("noop").mode("overwrite").save()
-    except Exception:
-        # warmup is best-effort: a failure must never block session use
-        pass
+    except Exception as e:  # noqa: BLE001 — reported, never raised
+        # warmup is best-effort: a failure must never block session use, but
+        # it makes every query pay the cold start, so say so
+        warnings.warn(
+            f"rify_spark session warm-up failed ({type(e).__name__}: {e}); "
+            "queries will pay first-use start-up costs",
+            RuntimeWarning,
+            stacklevel=2,
+        )

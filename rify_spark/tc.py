@@ -85,7 +85,7 @@ def smart_tc_fixpoint(
     ``facts`` equal the program's least fixpoint: premises ∪ copy-image ∪
     all B-path compositions, per graph."""
     from .checkpoint import CheckpointManager
-    from .infer import FactStore, FixpointResult
+    from .infer import FactStore, FixpointResult, restore_confs, saved_confs
 
     dtype = facts0.schema["p"].dataType
     p_lit = term_lit(rec["predicate"], dtype)
@@ -127,8 +127,8 @@ def smart_tc_fixpoint(
         "spark.sql.constraintPropagation.enabled": None,
         "spark.sql.shuffle.partitions": None,
     }
-    _saved = {k: spark.conf.get(k, "true") for k in _toggles}
-    _session_width = int(_saved["spark.sql.shuffle.partitions"])
+    _saved = saved_confs(spark, _toggles)
+    _session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     _percore = 250_000 * max(1, spark.sparkContext.defaultParallelism)
     codegen_below = (
         cfg.codegen_below_rows if cfg.codegen_below_rows is not None else _percore
@@ -313,6 +313,7 @@ def smart_tc_fixpoint(
                 d = spark.read.parquet(ckpt.extra_path(it, "d.parquet"))
                 if d_rows is None:
                     d_rows = d.count()  # footer-count of the parquet just written
+                    metrics[-1]["d_rows"] = d_rows
                 ckpt.save_iteration(
                     it,
                     novel,
@@ -331,9 +332,7 @@ def smart_tc_fixpoint(
                 break
 
     finally:
-        for k, v in _saved.items():
-            if _toggles[k] is not None:
-                spark.conf.set(k, v)
+        restore_confs(spark, _saved, [k for k, v in _toggles.items() if v is not None])
 
     return FixpointResult(
         facts=store.union(),

@@ -17,3 +17,12 @@ def spark():
         extra_conf={"spark.driver.memory": "4g"},
     )
     yield s
+
+
+@pytest.fixture
+def spark_engine(monkeypatch):
+    """Shut the driver-resident gate for one test: ``api.infer`` and
+    ``api.prove`` run the Spark fixpoint whatever the premise count."""
+    from rify_spark import api
+
+    monkeypatch.setattr(api, "LOCAL_MAX_PREMISES", -1)

@@ -652,3 +652,25 @@ def test_tiered_compaction_keeps_base_and_exact_union(spark):
     assert store.total_rows == 10_300
     assert store.union().count() == 10_300
     assert store.union_except_last().count() == 10_250
+
+
+@pytest.mark.parametrize("smart_tc", [True, False])
+def test_fixpoint_on_session_without_shuffle_width(spark, smart_tc):
+    """A session not built by get_spark may leave spark.sql.shuffle.partitions
+    unset: the fixpoint (tc.py for the TC pair, infer.py otherwise) reads the
+    built-in default and leaves the key unset on exit."""
+    from rify_spark.api import infer_df
+
+    key = "spark.sql.shuffle.partitions"
+    s = spark.newSession()
+    s.conf.unset(key)
+    nodes = [f"node_{n}" for n in range(4)]
+    facts = [(a, "parent", b, DG) for a, b in zip(nodes, nodes[1:])]
+    df = s.createDataFrame(facts, "s string, p string, o string, g string")
+    derived, _ = infer_df(
+        s, df, ancestry_rules(), InferConfig(encode_terms=False, smart_tc=smart_tc)
+    )
+    assert sorted(map(tuple, derived.collect())) == sorted(
+        (a, "ancestor", b, DG) for i, a in enumerate(nodes) for b in nodes[i + 1:]
+    )
+    assert s.conf.get(key, None) is None

@@ -347,7 +347,7 @@ def test_loading_of_rules_works(spark):
     validate(rules, [])
 
 
-def test_prove_frontier_walk_matches_collect_path(spark):
+def test_prove_frontier_walk_matches_collect_path(spark, spark_engine):
     """collect_reachable_arguments falls back to an iterative frontier join
     above collect_arguments_max_rows; with the threshold forced to 0 the
     frontier branch must produce the identical proof (and validate)."""

@@ -168,7 +168,7 @@ def test_chain_closure_parity_and_log_iterations(spark):
     assert rows_on == rows_off == oracle - set(facts)
 
 
-def test_random_graphs_parity_with_bystander_rules(spark):
+def test_random_graphs_parity_with_bystander_rules(spark, spark_engine):
     rng = random.Random(41)
     extra = Rule.create(
         [[U("a"), B("reach"), U("b"), U("g")]],
@@ -188,7 +188,7 @@ def test_random_graphs_parity_with_bystander_rules(spark):
         assert got == oracle, f"trial {trial}"
 
 
-def test_smart_tc_random_cyclic_graphs_parity(spark):
+def test_smart_tc_random_cyclic_graphs_parity(spark, spark_engine):
     """The pure two-rule program routes to the smart-TC strategy (tc.py);
     pin it against the naive evaluator on cyclic multi-graph inputs, both
     body orders (prepend: edge atom first; append: rec atom first)."""
@@ -255,6 +255,28 @@ def test_smart_tc_engaged_with_checkpoint_dir(spark, tmp_path):
     for d in iters:
         assert os.path.exists(os.path.join(ck, d, "meta.json"))
         assert os.path.isdir(os.path.join(ck, d, "d.parquet"))
+
+
+def test_smart_tc_checkpoint_metrics_count_every_round(spark, tmp_path):
+    """Checkpoint mode counts the squared wavefront (a parquet-footer read)
+    for its meta; each round's metrics entry carries that count too."""
+    from rify_spark.api import infer_df
+    from rify_spark.infer import InferConfig
+
+    n = 10
+    facts = [(f"n{i}", "next", f"n{i+1}", "g0") for i in range(n)]
+    edges = spark.createDataFrame(facts, "s string, p string, o string, g string")
+    derived, res = infer_df(
+        spark, edges, _linear_tc(), InferConfig(checkpoint_dir=str(tmp_path / "ck")),
+    )
+    rounds = [m for m in res.metrics if m["delta_rows"]]
+    assert rounds and all(m["strategy"] == "smart_tc" for m in rounds)
+    assert all(isinstance(m["d_rows"], int) for m in rounds)
+    # round i >= 2 leaves D = B^(2^(i-1)); round 1 never squares (D = B^1)
+    assert [m["d_rows"] for m in rounds] == [
+        max(0, n + 1 - 2 ** (m["iteration"] - 1)) for m in rounds
+    ]
+    assert sum(m["delta_rows"] for m in rounds) == derived.count() == n * (n + 1) // 2
 
 
 def test_smart_tc_checkpoint_resume_exact(spark, tmp_path):
