@@ -1,10 +1,9 @@
 """User-facing API: ``infer``, ``prove``, ``validate`` — the reference's
 three entry points (src/lib.rs:14-17).
 
-List inputs of at most ``LOCAL_MAX_PREMISES`` premises run on the
-driver-resident engine (local.py): no Spark job, no session access. Longer
-lists, requests that set ``checkpoint_dir``, ``resume`` or
-``max_iterations``, and the DataFrame entry point ``infer_df`` run the
+List inputs run on the driver-resident engine (local.py): no Spark job,
+no session access. Requests that set ``checkpoint_dir``, ``resume`` or
+``max_iterations``, and the DataFrame entry point ``infer_df``, run the
 Spark fixpoint. Both engines give the same ``infer`` closure in the same
 order. A ``prove`` step keeps the first round's derivation of its quad,
 with ties going to the smallest ``(rule_index, instantiation)``. The
@@ -112,26 +111,20 @@ def _check_quads(quads: Sequence) -> list:
     return out
 
 
-# List inputs up to this many premises run on the driver-resident engine
-# (local.py) instead of the Spark fixpoint. Measured with api.infer on a
-# 4-core local[4] session (driver heap 2 GB), Spark vs driver-resident:
-#   code-ontology repos (pipeline.code_ontology_rules), 1k-50k premises:
-#     9.3 s vs 0.03 s at 1k, 10.9 s vs 2.2 s at 50k (Spark is floor-bound);
-#   a linear-TC chain, whose closure is quadratic in the premises (the
-#   densest shape measured): 12.5 s vs 0.4 s at 250 edges, 26.5 s vs 9.4 s
-#   at 1,000, 47.4 s vs 30.7 s at 2,000 (2M derived quads).
-# The gate sits at the chain's 2,000 premises, where the driver still wins
-# but its margin is closing; wider inputs keep the Spark fixpoint.
-LOCAL_MAX_PREMISES = 2_000
-
-
-def _runs_local(premises: list, cfg: InferConfig) -> bool:
-    """Whether a list request runs on the driver-resident engine: it is small
-    enough and asks nothing about the Spark iteration process (checkpoints,
-    resume, an iteration cap)."""
+# List requests run on the driver-resident engine (local.py). Their premises
+# are in driver memory already, and the Spark path collects the whole closure
+# to the driver too. Measured with api.infer on a 4-core local[4] session
+# (driver heap 2 GB), Spark vs driver-resident, the driver won at every size:
+#   code-ontology repos (pipeline.code_ontology_rules): 9.3 s vs 0.03 s at
+#     1k premises, 10.9 s vs 2.2 s at 50k;
+#   a linear-TC chain, whose closure is quadratic in the premises: 12.5 s vs
+#     0.4 s at 250 edges, 47.4 s vs 30.7 s at 2,000 (2M derived quads).
+def _runs_local(cfg: InferConfig) -> bool:
+    """Whether a list request runs on the driver-resident engine: it asks
+    nothing about the Spark iteration process (checkpoints, resume, an
+    iteration cap)."""
     return (
-        len(premises) <= LOCAL_MAX_PREMISES
-        and cfg.checkpoint_dir is None
+        cfg.checkpoint_dir is None
         and not cfg.resume
         and cfg.max_iterations is None
     )
@@ -207,7 +200,7 @@ def infer(
     cfg = config or InferConfig()
     premises = _check_quads(premises)
     codec = TermCodec(_all_terms(premises, rules))
-    if _runs_local(premises, cfg):
+    if _runs_local(cfg):
         rows = local.infer(
             _encode_quads(codec, premises), _lower_strings(rules, codec)
         )
@@ -323,7 +316,7 @@ def prove(
 
     codec = TermCodec(_all_terms(premises, rules, extra=to_prove))
     goals_str = _encode_quads(codec, to_prove)
-    if _runs_local(premises, cfg):
+    if _runs_local(cfg):
         lproof = local.prove(
             _encode_quads(codec, premises), goals_str, _lower_strings(rules, codec)
         )

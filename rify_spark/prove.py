@@ -18,10 +18,9 @@ Behavioral port of the reference's ``low_prove`` + ``recall_proof``
     slice of the arguments table (proof DAGs are tiny; collection is either
     a single collect or an iterative frontier join at scale).
 
-``api.prove`` runs this path for premise lists longer than
-``api.LOCAL_MAX_PREMISES`` and for requests that set ``checkpoint_dir``,
-``resume`` or ``max_iterations``. Shorter lists run on the driver-resident
-engine (local.py), which reuses :class:`LowApplication` and
+``api.prove`` runs this path for requests that set ``checkpoint_dir``,
+``resume`` or ``max_iterations``. Other premise lists run on the
+driver-resident engine (local.py), which reuses :class:`LowApplication` and
 :func:`recall_proof`. Across engines the tie-break is the same
 (first round, then minimum ``(rule_index, inst)``). In string space
 (``encode_terms=False``) both engines give identical proofs; under hashed

@@ -1,5 +1,7 @@
+import contextlib
 import os
 import sys
+from unittest import mock
 
 import pytest
 
@@ -19,10 +21,18 @@ def spark():
     yield s
 
 
-@pytest.fixture
-def spark_engine(monkeypatch):
-    """Shut the driver-resident gate for one test: ``api.infer`` and
-    ``api.prove`` run the Spark fixpoint whatever the premise count."""
+@contextlib.contextmanager
+def spark_fixpoint():
+    """Within the block, ``api.infer`` and ``api.prove`` run the Spark
+    fixpoint instead of the driver-resident engine."""
     from rify_spark import api
 
-    monkeypatch.setattr(api, "LOCAL_MAX_PREMISES", -1)
+    with mock.patch.object(api, "_runs_local", lambda cfg: False):
+        yield
+
+
+@pytest.fixture
+def spark_engine():
+    """Run one test's ``api.infer`` / ``api.prove`` calls on Spark."""
+    with spark_fixpoint():
+        yield

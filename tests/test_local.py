@@ -2,8 +2,6 @@
 ``api.infer`` / ``api.prove``: exact parity with the Spark fixpoint in
 string space, no Spark jobs, and proof depth free of recursion limits."""
 
-from unittest import mock
-
 import pytest
 from hypothesis import given, settings, strategies as st
 
@@ -19,6 +17,7 @@ from rify_spark import (
     validate,
 )
 from rify_spark.pipeline import code_ontology_rules
+from conftest import spark_fixpoint
 from test_property import _SETTINGS, CONSTS, VARS, _atom, facts_st
 
 
@@ -32,12 +31,6 @@ def _rule_st(draw):
     head_pool = [B(c) for c in CONSTS] + [U(v) for v in sorted(body_vars)]
     head = draw(st.lists(_atom(head_pool), min_size=1, max_size=2))
     return Rule.create([list(a) for a in body], [list(a) for a in head])
-
-
-def _on_spark(fn, *args):
-    """``fn(*args)`` with the driver-resident gate shut."""
-    with mock.patch.object(api, "LOCAL_MAX_PREMISES", -1):
-        return fn(*args)
 
 
 def _outcome(fn, *args):
@@ -58,7 +51,8 @@ def test_local_engine_equals_spark_string_engine(spark, facts, rules, data):
     the same ExhaustedSearchSpace), as the Spark fixpoint over strings."""
     cfg = InferConfig(encode_terms=False)
     got = infer(spark, facts, rules, cfg)
-    assert got == _on_spark(infer, spark, facts, rules, cfg)
+    with spark_fixpoint():
+        assert got == infer(spark, facts, rules, cfg)
 
     known = sorted({t for q in facts for t in q} | {
         t for r in rules for t in r.bound_terms()
@@ -71,9 +65,9 @@ def test_local_engine_equals_spark_string_engine(spark, facts, rules, data):
     if candidates:
         goal = st.one_of(st.sampled_from(candidates), goal)
     goals = data.draw(st.lists(goal, min_size=1, max_size=3), label="goals")
-    assert _outcome(prove, spark, facts, goals, rules, cfg) == _outcome(
-        _on_spark, prove, spark, facts, goals, rules, cfg
-    )
+    local_outcome = _outcome(prove, spark, facts, goals, rules, cfg)
+    with spark_fixpoint():
+        assert local_outcome == _outcome(prove, spark, facts, goals, rules, cfg)
 
 
 def _repo_premises(g="graph://repo_1", modules=12):
@@ -117,7 +111,8 @@ def test_kg_shaped_proof_ties_match_spark_string_engine(spark):
     rules = code_ontology_rules()
     cfg = InferConfig(encode_terms=False)
     got = prove(spark, premises, goals, rules, cfg)
-    assert got == _on_spark(prove, spark, premises, goals, rules, cfg)
+    with spark_fixpoint():
+        assert got == prove(spark, premises, goals, rules, cfg)
     assert got[0].instantiations[0] == "sym://repo_1/mod_1/f0"
 
 
@@ -125,7 +120,7 @@ def test_prove_over_2000_node_chain_has_no_recursion_limit(spark):
     n = 1999  # edges: nodes n0..n1999
     facts = [(f"n{i}", "next", f"n{i + 1}", "g") for i in range(n)]
     facts.append((f"n{n}", "reached", "yes", "g"))
-    assert api._runs_local(facts, InferConfig())  # one Spark round per node otherwise
+    assert api._runs_local(InferConfig())  # one Spark round per node otherwise
     rules = [Rule.create(
         [[U("a"), B("next"), U("b"), U("g")], [U("b"), B("reached"), B("yes"), U("g")]],
         [[U("a"), B("reached"), B("yes"), U("g")]],
@@ -148,5 +143,4 @@ def test_prove_over_2000_node_chain_has_no_recursion_limit(spark):
     ],
 )
 def test_gate_keeps_spark_iteration_requests_on_spark(cfg, local):
-    assert api._runs_local([("a", "b", "c", "g")], cfg) is local
-    assert not api._runs_local([("a", "b", "c", "g")] * (api.LOCAL_MAX_PREMISES + 1), cfg)
+    assert api._runs_local(cfg) is local

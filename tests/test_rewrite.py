@@ -477,7 +477,7 @@ def test_premise_h_facts_block_rewrite_in_checkpoint_mode(spark, tmp_path):
     assert ("a", "reach", "c", "g0") not in got
 
 
-def test_lineage_mode_keeps_user_rules(spark):
+def test_lineage_mode_keeps_user_rules(spark, spark_engine):
     """prove() must attribute the user's own linear rule — no rewrite —
     and the proof must still validate."""
     from rify_spark import api

@@ -1,11 +1,10 @@
 """The reference vectors and the infer/prove properties on the Spark engine.
 
-List inputs under ``api.LOCAL_MAX_PREMISES`` run on the driver-resident
-engine (rify_spark/local.py), so the tests in test_infer.py, test_prove.py,
-test_api_edge.py and test_property.py exercise it under their own names.
-Importing them here collects them a second time, in this module, where the
-``spark_engine`` fixture (conftest.py) shuts the gate: the same vectors and
-properties pin the Spark fixpoint.
+List inputs run on the driver-resident engine (rify_spark/local.py), so the
+tests imported here exercise it under their own names. Importing them
+collects them a second time, in this module, where the ``spark_engine``
+fixture (conftest.py) sends ``api.infer`` and ``api.prove`` to Spark: the
+same vectors and properties pin the Spark fixpoint.
 """
 
 import pytest
@@ -48,6 +47,20 @@ from test_prove import (  # noqa: F401
     test_prove_single_step,
     test_search_space_exhausted,
     test_unconditional_rule as test_prove_unconditional_rule,
+)
+from test_rulesets import (  # noqa: F401
+    test_owl_property_characteristics,
+    test_rdfs_core_entailments,
+    test_rdfs_graph_scoped,
+)
+from test_structured_terms import (  # noqa: F401
+    test_serde_vector_through_infer,
+    test_serde_vector_through_prove_and_validate,
+)
+from test_validate import (  # noqa: F401
+    test_bad_rule_application,
+    test_irrelevant_facts_ignored,
+    test_no_such_rule,
 )
 
 pytestmark = pytest.mark.usefixtures("spark_engine")
